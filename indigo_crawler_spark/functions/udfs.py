@@ -7,8 +7,12 @@ transfer, one Python invocation per batch:
 
 - ``canonicalize_udf``: determinism beats built-in chains here; URL
   canonicalization must be byte-identical to the oracle (SURVEY.md F1).
-- ``robots_allowed_udf``: stdlib robotparser per distinct (host, robots_txt),
-  cached across rows within a batch and across batches within a worker.
+- ``robots_allowed_udf``: each distinct robots_txt is parsed by stdlib
+  robotparser and compiled once per worker into its ordered prefix rules;
+  rows then decide by first-match prefix, with a per-row stdlib
+  ``can_fetch`` fallback for URLs outside the provable fast path
+  (kernels/robots.py::robots_allowed_batch). The RFC 9309 wildcard matcher
+  stays per-row.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ from pyspark.sql.types import ArrayType, BooleanType, DoubleType, StringType
 from indigo_crawler_spark.kernels.canonicalize import canonicalize_url
 from indigo_crawler_spark.kernels.robots import (
     crawl_delay,
-    robots_allowed,
+    robots_allowed_batch,
     robots_allowed_rfc,
     robots_sitemaps,
 )
@@ -115,14 +119,16 @@ def make_robots_allowed_udf(user_agent: str, wildcards: bool = False):
     *wildcards* (cfg.robots_wildcards_enabled — SEMANTICS.md §Robots
     wildcards) the RFC 9309 matcher replaces the stdlib prefix matcher —
     same Arrow crossing, different kernel."""
-    gate = robots_allowed_rfc if wildcards else robots_allowed
 
     @F.pandas_udf(BooleanType())
     def _robots_allowed(canon_url: pd.Series, robots_txt: pd.Series) -> pd.Series:
-        out = [
-            gate(u, t if isinstance(t, str) else None, user_agent)
-            for u, t in zip(canon_url, robots_txt)
-        ]
+        if wildcards:
+            out = [
+                robots_allowed_rfc(u, t if isinstance(t, str) else None, user_agent)
+                for u, t in zip(canon_url, robots_txt)
+            ]
+        else:
+            out = robots_allowed_batch(canon_url, robots_txt, user_agent)
         return pd.Series(out, dtype="boolean")
 
     return _robots_allowed
@@ -131,16 +137,20 @@ def make_robots_allowed_udf(user_agent: str, wildcards: bool = False):
 @functools.lru_cache(maxsize=32)
 def make_crawl_delay_udf(user_agent: str):
     """pandas_udf: robots_txt → Crawl-delay seconds for *user_agent* (null =
-    none declared). Rides the same per-(host, robots_txt) parser cache as
-    the allow gate, so evaluating it on the already-joined gate frame adds
-    no parses — only a second Arrow column."""
+    none declared). Rides the same per-robots_txt parser cache as the allow
+    gate, so evaluating it on the already-joined gate frame adds no parses —
+    only a second Arrow column. The delay depends on the text alone, so it
+    is computed once per distinct text in the batch."""
 
     @F.pandas_udf(DoubleType())
     def _crawl_delay(robots_txt: pd.Series) -> pd.Series:
-        out = [
-            crawl_delay(t if isinstance(t, str) else None, user_agent)
-            for t in robots_txt
-        ]
+        delays: dict = {}
+        out = []
+        for t in robots_txt:
+            t = t if isinstance(t, str) else None
+            if t not in delays:
+                delays[t] = crawl_delay(t, user_agent)
+            out.append(delays[t])
         return pd.Series(out, dtype="float64")
 
     return _crawl_delay

@@ -6,10 +6,19 @@ per-(host, fetcher) admission gate: robots.txt + politeness budget
 per robots_txt within a process — both the oracle loop and each
 Arrow-batch worker benefit, and the allow gate and crawl-delay kernels share
 parses.
+
+``robots_allowed`` is the per-row definition (stdlib ``can_fetch``).
+``robots_allowed_batch`` is the engine's batch form of the same verdict:
+each distinct text is compiled once per worker, per user agent, into the
+ordered ``(prefix, allowance)`` rule list read off the parsed
+``RobotFileParser``, and a row whose URL provably survives ``can_fetch``'s
+normalization unchanged (``_FAST_PATH``) is decided by first-match prefix;
+every other row falls back to ``robots_allowed``.
 """
 
 from __future__ import annotations
 
+import re
 from urllib.robotparser import RobotFileParser
 
 USER_AGENT = "indigo-spark"
@@ -17,11 +26,10 @@ USER_AGENT = "indigo-spark"
 _cache: dict[str, RobotFileParser] = {}
 
 
-def _parser(host: str, robots_txt: str) -> RobotFileParser:
+def _parser(robots_txt: str) -> RobotFileParser:
     # keyed by text alone: parsing depends only on the text, and a text-only
     # key lets the crawl-delay kernel share parses with the allow gate
-    key = robots_txt
-    rp = _cache.get(key)
+    rp = _cache.get(robots_txt)
     if rp is None:
         rp = RobotFileParser()
         rp.parse(robots_txt.splitlines())
@@ -29,7 +37,7 @@ def _parser(host: str, robots_txt: str) -> RobotFileParser:
         # so a 64k cap holds the working set without unbounded growth
         if len(_cache) > 65536:
             _cache.clear()
-        _cache[key] = rp
+        _cache[robots_txt] = rp
     return rp
 
 
@@ -38,16 +46,90 @@ def robots_allowed(url: str, robots_txt: str | None, user_agent: str = USER_AGEN
     if robots_txt is None:
         return True
     try:
-        return _parser_url_ok(url, robots_txt, user_agent)
+        return _parser(robots_txt).can_fetch(user_agent, url)
     except Exception:
         return True  # unparseable robots.txt does not block the crawl
 
 
-def _parser_url_ok(url: str, robots_txt: str, user_agent: str) -> bool:
-    from urllib.parse import urlsplit
+# URLs whose path ``can_fetch`` provably leaves unchanged. can_fetch runs
+# unquote → urlparse → urlunparse(('', '', path, params, query, frag)) →
+# quote over the whole URL. On a match: no '%' anywhere, so unquote is the
+# identity; the scheme is a plain RFC 3986 scheme and the authority a bare
+# host with an optional numeric port (no userinfo, no IPv6 brackets, ASCII
+# only), so urlparse splits at the first '/' and raises nothing; the path
+# has no ';', '?' or '#', so params/query/fragment are empty, and it does
+# not start with '//', so urlunparse returns it as is; its charset is
+# quote's always-safe set plus '/', so quote is the identity too. The
+# result is group 1, or '/' when the path is empty.
+_FAST_PATH = re.compile(
+    r"[A-Za-z][A-Za-z0-9+.\-]*://[A-Za-z0-9.\-]+(?::[0-9]*)?"
+    r"((?:/(?!/)[A-Za-z0-9_.\-~/]*)?)\Z"
+)
 
-    host = urlsplit(url).netloc
-    return _parser(host, robots_txt).can_fetch(user_agent, url)
+# per user agent: robots_txt → ordered (prefix, allowance) rules, or None
+# when every URL is allowed
+_compiled: dict[str, dict[str, tuple[tuple[str, bool], ...] | None]] = {}
+
+
+def _compile(robots_txt: str, user_agent: str) -> tuple[tuple[str, bool], ...] | None:
+    """The rule list ``can_fetch(user_agent, ·)`` applies under *robots_txt*,
+    read off the parsed ``RobotFileParser`` (no second robots parser)."""
+    try:
+        rp = _parser(robots_txt)
+    except Exception:
+        return None  # unparseable robots.txt does not block the crawl
+    if rp.disallow_all or not rp.last_checked:
+        return (("", False),)
+    if rp.allow_all:
+        return None
+    for entry in rp.entries:
+        if entry.applies_to(user_agent):
+            break
+    else:
+        entry = rp.default_entry
+    if entry is None:
+        return None
+    rules = tuple(
+        ("" if line.path == "*" else line.path, line.allowance)
+        for line in entry.rulelines
+    )
+    # no Disallow that can match ⇒ every verdict is True
+    return rules if any(not allow for _, allow in rules) else None
+
+
+def robots_allowed_batch(urls, robots_txts, user_agent: str = USER_AGENT) -> list[bool]:
+    """``[robots_allowed(u, t, user_agent) for u, t in zip(urls, robots_txts)]``
+    with non-str texts read as None — decided by prefix match on the
+    compiled rules, falling back to ``robots_allowed`` for any URL outside
+    ``_FAST_PATH``."""
+    compiled = _compiled.setdefault(user_agent, {})
+    fast = _FAST_PATH.match
+    out = []
+    for url, txt in zip(urls, robots_txts):
+        if not isinstance(txt, str):
+            out.append(True)
+            continue
+        try:
+            rules = compiled[txt]
+        except KeyError:
+            if len(compiled) > 65536:
+                compiled.clear()
+            rules = compiled[txt] = _compile(txt, user_agent)
+        if rules is None:
+            out.append(True)
+            continue
+        m = fast(url) if isinstance(url, str) else None
+        if m is None:
+            out.append(robots_allowed(url, txt, user_agent))
+            continue
+        path = m.group(1) or "/"
+        for prefix, allow in rules:
+            if path.startswith(prefix):
+                out.append(allow)
+                break
+        else:
+            out.append(True)
+    return out
 
 
 def robots_sitemaps(robots_txt: str | None) -> list[str]:
@@ -60,7 +142,7 @@ def robots_sitemaps(robots_txt: str | None) -> list[str]:
     if robots_txt is None:
         return []
     try:
-        maps = _parser("", robots_txt).site_maps()
+        maps = _parser(robots_txt).site_maps()
         return list(maps) if maps else []
     except Exception:
         return []
@@ -78,9 +160,8 @@ def crawl_delay(robots_txt: str | None, user_agent: str = USER_AGENT) -> float |
     if robots_txt is None:
         return None
     try:
-        # parser cache is keyed (host, text); delay depends on text only —
-        # reuse the cache with a sentinel host
-        d = _parser("", robots_txt).crawl_delay(user_agent)
+        # shares the allow gate's parse: the parser cache is keyed by text
+        d = _parser(robots_txt).crawl_delay(user_agent)
         return float(d) if d is not None else None
     except Exception:
         return None
@@ -126,10 +207,8 @@ def crawl_delay(robots_txt: str | None, user_agent: str = USER_AGENT) -> float |
 #   * unparseable robots.txt ⇒ allowed (same shrug as robots_allowed).
 # ---------------------------------------------------------------------------
 
-import re as _re
-
 _rfc_cache: dict[str, list[tuple[list[str], list[tuple[bool, str]]]]] = {}
-_pat_cache: dict[str, "_re.Pattern[str]"] = {}
+_pat_cache: dict[str, "re.Pattern[str]"] = {}
 
 
 def _rfc_groups(robots_txt: str) -> list[tuple[list[str], list[tuple[bool, str]]]]:
@@ -179,8 +258,8 @@ def _pattern_matches(pattern: str, target: str) -> bool:
     if rx is None:
         anchored = pattern.endswith("$")
         body = pattern[:-1] if anchored else pattern
-        parts = [_re.escape(p) for p in body.split("*")]
-        rx = _re.compile("^" + ".*".join(parts) + ("$" if anchored else ""))
+        parts = [re.escape(p) for p in body.split("*")]
+        rx = re.compile("^" + ".*".join(parts) + ("$" if anchored else ""))
         if len(_pat_cache) > 65536:
             _pat_cache.clear()
         _pat_cache[pattern] = rx

@@ -1039,7 +1039,8 @@ def run_round(
     # variable-shape discovery suffix (skew splits, partition coalescing)
     # exactly as before; the session conf is restored when the round ends.
     _aqe_prev = None
-    _shuf_prev = None
+    _shuf_set = False  # the round changed shuffle.partitions
+    _shuf_prev = None  # the session's own value; None = never set
     if rank_single:
         _aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -1049,6 +1050,7 @@ def run_round(
         nshuf = _small_round_shuffle()
         if nshuf > 0:
             _shuf_prev = spark.conf.get("spark.sql.shuffle.partitions", None)
+            _shuf_set = True
             spark.conf.set("spark.sql.shuffle.partitions", str(nshuf))
     gx = _gate_exprs()
     gate_obs = Observation()
@@ -1872,8 +1874,11 @@ def run_round(
         pool.shutdown(wait=True)
         if _aqe_prev is not None:
             spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
-        if _shuf_prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", _shuf_prev)
+        if _shuf_set:
+            if _shuf_prev is None:
+                spark.conf.unset("spark.sql.shuffle.partitions")
+            else:
+                spark.conf.set("spark.sql.shuffle.partitions", _shuf_prev)
 
     host_kept = _obs_int(host_obs, "host_kept") if host_obs is not None else n_kept
     counters = {

@@ -79,3 +79,18 @@ def test_calm_round_skips_heavy_frontier_write(state):
         m = state.io.read_manifest(f"round_{r:05d}")
         assert m["counters"]["frontier_heavy_hosts_next"] == 0
         assert not state.io.exists(f"heavy_hosts_frontier/round={r + 1}")
+
+
+def test_small_round_leaves_unset_shuffle_partitions_unset(spark, state):
+    # a small round lowers spark.sql.shuffle.partitions for its own plans;
+    # when the session never set the key, the round must unset it again
+    # rather than leave every later (at-scale) round at the small value
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        run_round(spark, state, 2)
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
